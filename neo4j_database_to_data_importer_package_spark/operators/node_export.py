@@ -51,16 +51,13 @@ class NodeExportResult:
     df: DataFrame
 
 
-def export_nodes(
-    node_dfs: dict[str, DataFrame],
+def export_node(
+    df: DataFrame,
+    label: str,
     unique_constraints: dict[str, list[str]] | None = None,
-    identifiers: dict[str, str] | None = None,
-) -> dict[str, NodeExportResult]:
-    """All labels; the returned dict is the reference's ``node_files`` IR
-    plus the lazy DataFrames (writes happen in plans.exporter)."""
-    results: dict[str, NodeExportResult] = {}
-    for label, df in node_dfs.items():
-        ident = (identifiers or {}).get(label)
-        out, ident = export_node_table(df, label, unique_constraints, ident)
-        results[label] = NodeExportResult(label, ident, list(out.columns), out)
-    return results
+    identifier: str | None = None,
+) -> NodeExportResult:
+    """One label's entry of the reference's ``node_files`` IR plus its lazy
+    DataFrame; ``plans.exporter`` builds and writes one per write task."""
+    out, ident = export_node_table(df, label, unique_constraints, identifier)
+    return NodeExportResult(label, ident, list(out.columns), out)

@@ -92,25 +92,25 @@ class RelExportResult:
     df: DataFrame
 
 
-def export_relationships(
+def export_relationship(
     view: GraphView,
+    spec: EdgeSpec,
     identifiers: dict[str, str],
     validate_endpoints: bool = True,
-) -> dict[str, RelExportResult]:
-    """All patterns → the reference's ``rel_files`` IR + lazy DataFrames.
+) -> RelExportResult | None:
+    """One pattern's entry of the reference's ``rel_files`` IR plus its lazy
+    DataFrame, or None when the pattern is skipped; ``plans.exporter``
+    builds and writes one per write task.
 
-    One pass over each edge table total (vs the reference's k+1 scans per
-    rel type, BASELINE.md "scan amplification").
+    One pass over the edge table (vs the reference's k+1 scans per rel
+    type, BASELINE.md "scan amplification").
     """
-    results: dict[str, RelExportResult] = {}
-    for spec in view.spec.edges:
-        df = export_relationship_table(view, spec, identifiers, validate_endpoints)
-        if df is None:
-            continue
-        src_id_prop = identifiers[spec.src_label]
-        tgt_id_prop = identifiers[spec.tgt_label]
-        src_col, tgt_col = endpoint_column_names(spec, src_id_prop, tgt_id_prop)
-        results[spec.pattern_key] = RelExportResult(
-            spec.pattern_key, spec, list(df.columns), src_col, tgt_col, sorted(spec.props), df
-        )
-    return results
+    df = export_relationship_table(view, spec, identifiers, validate_endpoints)
+    if df is None:
+        return None
+    src_col, tgt_col = endpoint_column_names(
+        spec, identifiers[spec.src_label], identifiers[spec.tgt_label]
+    )
+    return RelExportResult(
+        spec.pattern_key, spec, list(df.columns), src_col, tgt_col, sorted(spec.props), df
+    )

@@ -70,16 +70,22 @@ def _csv_writer(df: DataFrame):
 
 
 def write_csv_single_file(df: DataFrame, path: str, compat_render: bool = False) -> str:
-    """Exact-filename single CSV via coalesce(1) + commit-rename."""
+    """Exact-filename single CSV via coalesce(1) + commit-rename.
+
+    The temp dir is removed whether or not the write succeeds, so a failed
+    write leaves no ``*.__tmp__`` debris behind.
+    """
     if compat_render:
         df = python_render(df)
     tmp = path + ".__tmp__"
-    _csv_writer(df.coalesce(1)).csv(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.csv"))
-    if not part:  # empty result still needs a header-only file
-        part = glob.glob(os.path.join(tmp, "part-*"))
-    shutil.move(part[0], path)
-    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        _csv_writer(df.coalesce(1)).csv(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.csv"))
+        if not part:  # empty result still needs a header-only file
+            part = glob.glob(os.path.join(tmp, "part-*"))
+        shutil.move(part[0], path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return path
 
 

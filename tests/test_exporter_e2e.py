@@ -10,8 +10,18 @@ from datetime import datetime
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from neo4j_database_to_data_importer_package_spark.catalog import GraphCatalog
+from neo4j_database_to_data_importer_package_spark.plans import exporter
 from neo4j_database_to_data_importer_package_spark.plans.exporter import GraphExporter
-from neo4j_database_to_data_importer_package_spark.sources.star_schema import load_graph_view
+from neo4j_database_to_data_importer_package_spark.sources.star_schema import (
+    EdgeSpec,
+    GraphSpec,
+    GraphView,
+    NodeSpec,
+    load_graph_view,
+)
 
 
 @pytest.fixture(scope="module")
@@ -145,3 +155,83 @@ def test_sharded_mode_manifest(view, tmp_path):
     assert manifest["columns"][0] == "c_custkey"
     assert len(manifest["shards"]) >= 1
     assert all(s.startswith("Customer/") for s in manifest["shards"])
+
+
+def test_sharded_mode_model_matches_single_file(export_dir, view, tmp_path):
+    """Both modes sample from the written CSV, so Spark renders the sample
+    (e.g. ``1999-03-24T00:00:00.000``, not Python's ``str()`` of a datetime)."""
+    out, single = export_dir
+    sharded = GraphExporter(view, str(tmp_path / "sharded"), format_version="3.0",
+                            single_file=False).run()
+    assert sharded.model == single.model
+    placed = sharded.manifest.rels["Customer_PLACED_Order"].sample
+    assert "T" in placed["o_orderdate"]
+
+
+def _export_bytes(result) -> dict[str, bytes]:
+    return {name: open(os.path.join(result.output_dir, name), "rb").read()
+            for name in result.files}
+
+
+@pytest.mark.parametrize("version", ["3.0", "2.4.0"])
+def test_export_is_independent_of_write_concurrency(view, tmp_path, version):
+    """One writer thread and the default pool produce the same CSVs, model
+    JSON and zip member order; all writes in flight at once change nothing
+    a consumer sees."""
+    results = [
+        GraphExporter(view, str(tmp_path / name), format_version=version, **kwargs)
+        .run(create_zip_file=True, zip_path=str(tmp_path / f"{name}.zip"))
+        for name, kwargs in (("serial", {"max_parallel_writes": 1}), ("default", {}))
+    ]
+    serial, parallel = (_export_bytes(r) for r in results)
+    assert len(serial) == 13 and serial == parallel
+    serial_members, parallel_members = (zipfile.ZipFile(r.zip_path).namelist() for r in results)
+    assert serial_members == parallel_members == results[0].files
+
+
+def _view_with_failing_node(spark, rel_types=("KNOWS",)):
+    """A Person label whose Python UDF raises, and one Person→Person
+    pattern per relationship type."""
+
+    @F.udf("string")
+    def boom(v):
+        raise ValueError(f"boom on {v}")
+
+    people = spark.createDataFrame([("p1", "alice"), ("p2", "bob")], "pid string, name string")
+    edges = spark.createDataFrame([("p1", "p2")], "src_pid string, dst_pid string")
+    spec = GraphSpec(
+        nodes=[NodeSpec("Person", "person", "pid")],
+        edges=[EdgeSpec("Person", t, "Person", t.lower(), "src_pid", "dst_pid") for t in rel_types],
+    )
+    nodes = {"Person": people.withColumn("shout", boom("name"))}
+    tables = {"person": people, **{t.lower(): edges for t in rel_types}}
+    return GraphView(spark, spec, nodes, tables, GraphCatalog())
+
+
+def test_failed_write_leaves_no_debris(spark, tmp_path):
+    """A table whose Python UDF raises fails the export; no ``*.__tmp__``
+    directory and no zip are left behind."""
+    out, zip_path = tmp_path / "export", tmp_path / "export.zip"
+    with pytest.raises(Exception, match="boom on"):
+        GraphExporter(_view_with_failing_node(spark), str(out)).run(
+            create_zip_file=True, zip_path=str(zip_path))
+    assert not [e for e in os.listdir(out) if e.endswith(".__tmp__")]
+    assert not zip_path.exists()
+
+
+def test_failed_write_cancels_writes_not_started(spark, tmp_path, monkeypatch):
+    """With one writer thread, no table write starts after the node write
+    fails: the relationship writes queued behind it are cancelled, and the
+    node's error is the one raised, not the other stage's cancellation."""
+    started = []
+    write = exporter.write_csv_single_file
+
+    def recording(df, path, **kwargs):
+        started.append(os.path.basename(path))
+        return write(df, path, **kwargs)
+
+    monkeypatch.setattr(exporter, "write_csv_single_file", recording)
+    view = _view_with_failing_node(spark, rel_types=("KNOWS", "LIKES", "TRUSTS"))
+    with pytest.raises(Exception, match="boom on"):
+        GraphExporter(view, str(tmp_path / "export"), max_parallel_writes=1).run()
+    assert started[-1] == "Person.csv"

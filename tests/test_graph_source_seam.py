@@ -13,9 +13,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from neo4j_database_to_data_importer_package_spark.operators.node_export import export_nodes
+from neo4j_database_to_data_importer_package_spark.operators.node_export import export_node
 from neo4j_database_to_data_importer_package_spark.operators.rel_export import (
-    export_relationships,
+    export_relationship,
 )
 from neo4j_database_to_data_importer_package_spark.sources import (
     EdgeSpec,
@@ -91,20 +91,24 @@ def test_connector_view_matches_star_schema_view(spark):
     for label in ("Customer", "Order"):
         assert not [c for c in neo_view.nodes[label].columns if c.startswith("<")]
 
-    # Identical node exports through the shared DAG.
+    # Identical node exports through the per-table builders the exporter's
+    # write tasks run.
     for view in (star_view, neo_view):
         ids = view.declared_identifiers()
         assert ids == {"Customer": "c_custkey", "Order": "o_orderkey"}
-    star_nodes = export_nodes(star_view.nodes, identifiers=star_view.declared_identifiers())
-    neo_nodes = export_nodes(neo_view.nodes, identifiers=neo_view.declared_identifiers())
+    ids = star_view.declared_identifiers()
     for label in ("Customer", "Order"):
-        a, b = star_nodes[label], neo_nodes[label]
+        a, b = (export_node(view.nodes[label], label, identifier=ids[label])
+                for view in (star_view, neo_view))
+        assert a.identifier == b.identifier == ids[label]
         assert a.columns == b.columns
         assert sorted(map(tuple, a.df.collect())) == sorted(map(tuple, b.df.collect()))
 
     # Identical relationship exports.
-    star_rels = export_relationships(star_view, star_view.declared_identifiers())
-    neo_rels = export_relationships(neo_view, neo_view.declared_identifiers())
+    star_rels, neo_rels = (
+        {spec.pattern_key: export_relationship(view, spec, ids) for spec in view.spec.edges}
+        for view in (star_view, neo_view)
+    )
     assert set(star_rels) == set(neo_rels) == {"Customer_PLACED_Order"}
     a, b = star_rels["Customer_PLACED_Order"], neo_rels["Customer_PLACED_Order"]
     assert a.columns == b.columns == ["Customer_c_custkey", "Order_o_orderkey",
